@@ -232,7 +232,7 @@ object Bench {
         // analysis, janino codegen, operator-cache builds — which
         // parallelizes across queries while local[32] has executor
         // threads to spare. Shared operator state is lock-protected
-        // (OpCache.swap and the memo tables are synchronized; the CDC
+        // (every OpCache call holds the cache's lock; the CDC
         // publish moves staged bucket directories at the FS level and
         // mutates no session conf at all), and every stateful query
         // owns its table names, so
@@ -277,10 +277,17 @@ object Bench {
     // bandwidth bracket 1/3 — see membwProbe (the second interval axis)
     val membws = scala.collection.mutable.ArrayBuffer(membwProbe())
     (1 to repeat).foreach { pass =>
-      def runPass(): Map[String, Double] = queries.map { case (name, fn) =>
+      // A query that throws in any timed run is named in `failed` and
+      // left out of every total: its elapsed seconds time a crash, not
+      // the query.
+      val failed = scala.collection.mutable.SortedSet.empty[String]
+      def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
+        try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+        catch { case _: Throwable => failed += name; None }
+      }
+      def runPass(): Map[String, Double] = queries.flatMap { case (name, fn) =>
+        timed(name, fn).map(name -> _)
       }.toMap
       def flaggedOf(rs: Map[String, Double]): Seq[(String, Double)] = {
         val sorted = rs.values.toSeq.sorted
@@ -361,7 +368,6 @@ object Bench {
       // isolated re-times finish would otherwise certify a warm total
       // measured entirely inside contended brackets as clean
       val headlineIdx = intervalIndex
-      val total = if (results.nonEmpty) results.values.sum else 0.0
       // Contention adjudication IN the artifact (not after the fact):
       // a full gauntlet pass lands GC/compilation/machine noise on
       // whichever query it happens to hit, inflating that query 3-10×
@@ -389,7 +395,7 @@ object Bench {
         if (bandWide(passSticks, ystickRef))
           (flagged ++ results.toSeq.sortBy(-_._2).take(isolateTop)).distinctBy(_._1)
         else flagged
-      val isolated = toIsolate.map { case (name, fullPass) =>
+      val isolated = toIsolate.flatMap { case (name, fullPass) =>
         val fn = queries(name)
         // Min of 2 runs, extended up to 4 while the min still exceeds
         // 1.5× the full-pass time (was 3× through r14): a flagged
@@ -403,14 +409,18 @@ object Bench {
         // still the min; `isolated_total` semantics unchanged),
         // bounded at 4 runs — the r14 verdict's prescription #7.
         val runs = scala.collection.mutable.ArrayBuffer.empty[Double]
-        while (runs.length < 2 ||
-            (runs.length < 4 && runs.min > 1.5 * fullPass)) {
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-          runs += (System.nanoTime() - t0) / 1e9
+        var ok = true
+        while (ok && (runs.length < 2 ||
+            (runs.length < 4 && runs.min > 1.5 * fullPass))) {
+          timed(name, fn) match {
+            case Some(t) => runs += t
+            case None => ok = false
+          }
         }
-        name -> runs.min
+        Option.when(ok)(name -> runs.min)
       }.toMap
+      results = results -- failed
+      val total = results.values.sum
       // close the isolated block's bracket (only when one ran): its
       // phase index is min(last pass-phase sample, this one) — the r12
       // sitting's smoking gun (x196 isolated 3× its in-pass time)
@@ -457,10 +467,10 @@ object Bench {
       // end) — the cross-day axis; see membwProbe
       val membwJson = membws.map(v => math.round(v * 10000) / 10000.0)
         .mkString("[", ",", "]")
-      val suffix =
-        s""","sf":"$sfDir","warm":$warm,"passes":$passes,"cold_total":${math.round(coldTotal * 1000) / 1000.0},"yardstick":$ysJson,"yardstick_cold":$ysColdJson,"yardstick_ref":$ystickRef,"ref_stale":$refStale,"interval_index":$headlineIdx,"interval_index_max":$intervalIndexMax,"interval_phases":$phasesJson,"membw":$membwJson,"isolated":$isoJson,"isolated_total":${math.round(isolatedTotal * 1000) / 1000.0},"metric":"total","unit":"sec","value":$total}"""
+      def suffix(failedNames: Seq[String]): String =
+        s""","failed":${failedNames.map(n => "\"" + n + "\"").mkString("[", ",", "]")},"sf":"$sfDir","warm":$warm,"passes":$passes,"cold_total":${math.round(coldTotal * 1000) / 1000.0},"yardstick":$ysJson,"yardstick_cold":$ysColdJson,"yardstick_ref":$ystickRef,"ref_stale":$refStale,"interval_index":$headlineIdx,"interval_index_max":$intervalIndexMax,"interval_phases":$phasesJson,"membw":$membwJson,"isolated":$isoJson,"isolated_total":${math.round(isolatedTotal * 1000) / 1000.0},"metric":"total","unit":"sec","value":$total}"""
       // Full-precision line for logs/humans (may exceed harness windows):
-      println(s"""{"queries":$qs$suffix""")
+      println(s"""{"queries":$qs${suffix(failed.toSeq)}""")
       // The harness that grades this keeps only the LAST ~2000 chars of
       // captured output and parses JSON from that window — a line longer
       // than the window is front-truncated into unparseable text. Emit a
@@ -470,14 +480,20 @@ object Bench {
       val budget = 1800
       val byTime = results.toSeq.sortBy(-_._2)
         .map { case (k, v) => s"\"" + k + "\":" + math.round(v * 1000) / 1000.0 }
-      val fixed = s"""{"omitted":00,"queries":{""".length + 1 + suffix.length
+      // failed names are kept while they fit, the rest counted as "+N more"
+      def compactSuffix(shown: Int): String = suffix(failed.toSeq.take(shown) ++
+        Option.when(shown < failed.size)(s"+${failed.size - shown} more"))
+      val shown = (failed.size to 0 by -1).find(n =>
+        s"""{"omitted":000,"queries":{}""".length + compactSuffix(n).length <= budget).getOrElse(0)
+      val compact = compactSuffix(shown)
+      val fixed = s"""{"omitted":000,"queries":{""".length + 1 + compact.length
       val kept = scala.collection.mutable.ArrayBuffer.empty[String]
       var used = fixed
       byTime.foreach { e =>
         if (used + e.length + 1 <= budget) { kept += e; used += e.length + 1 }
       }
       val omitted = byTime.length - kept.length
-      println(s"""{"omitted":$omitted,"queries":${kept.mkString("{", ",", "}")}$suffix""")
+      println(s"""{"omitted":$omitted,"queries":${kept.mkString("{", ",", "}")}$compact""")
     }
     spark.stop()
   }

@@ -216,13 +216,13 @@ object CityBike {
       fact: DataFrame)
 
   // WEAKLY keyed by session (the OpCache audit-map rule): a strong
-  // (session, path) TrieMap pinned every stopped/replaced session —
+  // (session, path) concurrent map pinned every stopped/replaced session —
   // SessionState, analyzer caches, six persisted lineages — for the
   // JVM's lifetime; a long-lived JVM cycling sessions leaked one
   // warehouse per cycle with nothing short of a global clearMemo()
   // (which also tears down the LIVE session's entries) to release it.
-  // All access under this lock — which also closes TrieMap
-  // .getOrElseUpdate's double-evaluation window, where a concurrent
+  // All access under this lock — which also closes a concurrent map's
+  // getOrElseUpdate double-evaluation window, where a concurrent
   // first build left a loser Warehouse whose persists never unpersist.
   private val memo = new java.util.WeakHashMap[
     SparkSession, scala.collection.mutable.Map[String, Warehouse]]()

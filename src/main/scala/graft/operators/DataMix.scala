@@ -466,29 +466,6 @@ object DataMix {
       .drop("__src", "__thr")
   }
 
-  /** Disjoint, exhaustive train/test split on the same hash gate. */
-  def trainTestSplit(df: DataFrame, testFrac: Double, salt: Long, keyCols: Seq[Column]): (DataFrame, DataFrame) = {
-    val cut = lit((testFrac * Buckets).toLong)
-    val g = gate(salt, keyCols)
-    (df.filter(g >= cut), df.filter(g < cut))
-  }
-
-  /** Weighted mixture: each source contributes an independent
-    * deterministic sample at its own rate (rates in [0,1] are
-    * per-source keep fractions, not relative weights).
-    */
-  def weightedMix(sources: Seq[(DataFrame, Double)], salt: Long, keyCols: Seq[Column]): DataFrame =
-    sources.zipWithIndex.map { case ((df, frac), i) =>
-      hashSample(df, frac, salt + i, keyCols)
-    }.reduce(_ unionByName _)
-
-  /** Deterministic global shuffle: training-order randomization that
-    * is reproducible across runs and cluster sizes (a range-partition
-    * sort on the salted key hash — unlike orderBy(rand())).
-    */
-  def shuffleDeterministic(df: DataFrame, salt: Long, keyCols: Seq[Column]): DataFrame =
-    df.orderBy(xxhash64((lit(salt) +: keyCols): _*))
-
   /** The [[md5Hash]] draw widened to 52 bits as an EXACT double in
     * (0,1]: 13 hex nibbles → integer v ∈ [0, 2^52), then (v+1)/2^52.
     * Both steps are exactly representable (the divisor is a power of

@@ -98,7 +98,7 @@ object GridCluster {
     val edges = nbr.join(
       cached.select(col("cell_id").as("doc_b")), Seq("doc_b"))
       .select("doc_a", "doc_b")
-    val labels = Dedup.resolveClusters(edges)
+    val labels = Dedup.resolveClusters(edges, site = "grid.resolve")
     cached
       .join(
         labels.select(col("id").as("cell_id"), col("cluster_id")),

@@ -432,15 +432,14 @@ object Multimodal {
   /** The synthesize → meta → stub-feature pipeline as a MEMOIZED
     * (vec_id, embedding) table. Typed pipelines embed fresh closure
     * objects per construction, so plan-equality memoization
-    * ([[OpCache.swap]]) can never hit across invocations — the caller
-    * pins the inputs with a fingerprint (the source directory)
-    * instead, and repeated in-session consumers (the multimodal ANN
-    * query, its recall gate) share one persisted feature table rather
-    * than re-running the encode pipeline each time.
+    * ([[OpCache.swap]]) can never hit across invocations — the slot is
+    * keyed on the untyped `docs` input instead, and repeated
+    * in-session consumers (the multimodal ANN query, its recall gate)
+    * share one persisted feature table rather than re-running the
+    * encode pipeline each time.
     */
-  def featureTable(docs: DataFrame, fingerprint: String)(
-      implicit spark: SparkSession): DataFrame =
-    OpCache.swapKeyed("mm.feats", fingerprint,
+  def featureTable(docs: DataFrame)(implicit spark: SparkSession): DataFrame =
+    OpCache.swapByInput("mm.feats", docs)(
       extractFeaturesStub(extractMeta(synthesizeMedia(docs))).toDF()
         .select(col("doc_id").as("vec_id"), col("feature").as("embedding")))
 

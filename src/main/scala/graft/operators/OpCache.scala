@@ -6,32 +6,36 @@ import org.apache.spark.storage.StorageLevel
 /** Bounded lifecycle for operator-internal persisted tables.
   *
   * Operators like MinHash-LSH and sign-LSH ANN materialize an
-  * intermediate (signatures, prepared corpus) that both sides of a
-  * self-join read. Bare `persist()` leaks: every invocation in a long
-  * session (bench warm+timed pass, scale-probe loops over growing
-  * replicas) registers another cached table, bounded only by the cache
-  * manager's plan-dedup. Routing the persist through `swap` keeps at
-  * most ONE live table per call-site key: re-invoking the operator on a
-  * NEW input unpersists the previous round's table; re-invoking on the
-  * SAME input (plan-equal — the bench warm/timed case) keeps the shared
-  * cache entry hot.
+  * intermediate (signatures, prepared corpus, trained centroids) that
+  * several plans read. Bare `persist()` leaks: every invocation in a
+  * long session registers another cached table, bounded only by the
+  * cache manager's plan-dedup. Routing it through [[swapByInput]]
+  * keeps at most ONE live table per (session, key), held together with
+  * the untyped INPUT plan it was built from: re-invoking the operator
+  * on a NEW input unpersists the previous table; re-invoking on the
+  * SAME input (`sameResult`) hands the live table back without
+  * building the new plan. [[swap]] is the common case where the input
+  * IS the cached plan.
   *
-  * SINGLE-SLOT CONTRACT: `swap`/`swapKeyed` keep exactly ONE live
-  * entry per (session, key). A workload that ALTERNATES two inputs on
-  * the same key (corpus A, corpus B, corpus A, …) therefore
-  * unpersists and recomputes on every call while looking cached —
-  * a throughput hazard, never a correctness one: `swap` serves a
-  * cached frame only when its analyzed plan `sameResult`s the
-  * requested one, and `swapKeyed` only when the caller's input
-  * fingerprint matches, so a stale entry can never be handed to a
-  * different input. The declared query surface never alternates
-  * (each key's consumers share one input per session — MECHANICALLY
-  * verified: InvariantsSpec's "OpCache single-slot" test constructs
-  * the full declared surface on a fresh session and asserts via
-  * `alternations` that no key observed a second distinct input
-  * fingerprint); a future consumer that genuinely alternates inputs
-  * should use per-input keys (e.g. suffix the key with the
-  * fingerprint) rather than widening this cache to multi-slot.
+  * Keying on the input, not the built plan, is what lets one rule
+  * cover every operator: typed pipelines (mapPartitions closures),
+  * udaf-bearing plans (freshly resolved encoders on every analysis)
+  * and eager loops (localCheckpoint leaves) never compare `sameResult`
+  * to their own re-construction, but their untyped source frame does.
+  * The memo is sound only when the build is deterministic in its
+  * input and in whatever the key encodes (geometry, call site) — the
+  * same contract a shuffle-file reuse assumes.
+  *
+  * SINGLE-SLOT CONTRACT: a workload that ALTERNATES two inputs on one
+  * key (corpus A, corpus B, corpus A, …) unpersists and recomputes on
+  * every call while looking cached — a throughput hazard, never a
+  * correctness one, since a hit requires `sameResult` against the
+  * stored input. The declared query surface never alternates
+  * (InvariantsSpec's "OpCache single-slot" test constructs the full
+  * surface twice on a fresh session and asserts via `alternations`
+  * that no key observed a second distinct input); a consumer that
+  * genuinely alternates inputs should use per-input keys rather than
+  * widening this cache to multi-slot.
   */
 object OpCache {
 
@@ -46,19 +50,20 @@ object OpCache {
   def paramKey(segments: String*): String = segments.mkString("\u0000")
 
   // Keyed by (session, call site): a plan-equal DataFrame from a
-  // STOPPED session must never be handed back to a new one.
-  private val live = scala.collection.mutable.Map
-    .empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
+  // STOPPED session must never be handed back to a new one. The value
+  // is the analyzed input plan the entry was built from, and the
+  // persisted result.
+  private val slots = scala.collection.mutable.Map
+    .empty[(org.apache.spark.sql.SparkSession, String),
+      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]
 
   // ——— no-alternation observability (the r11 verdict's finding #3:
   // the single-slot contract's "never alternates" claim was verified
   // by hand each round) ———
-  // Every swap/swapKeyed call records the input fingerprint it
-  // carried: the analyzed plan's semanticHash for `swap` (the same
-  // equivalence `sameResult` decides hits on) and the caller's
-  // fingerprint string for `swapKeyed`. A key is a throughput hazard
-  // only if it sees MORE THAN ONE distinct fingerprint in a session
-  // (every later call thrashes the slot); `alternations` surfaces
+  // Every call records the semanticHash of the input plan it carried
+  // (the same equivalence `sameResult` decides hits on). A key is a
+  // throughput hazard only if it sees MORE THAN ONE distinct
+  // fingerprint in a session (every later call thrashes the slot); `alternations` surfaces
   // exactly those keys, and the InvariantsSpec single-slot test
   // asserts the set is empty over the full declared surface on a
   // fresh session. Deliberately NOT cleared by `clear()` (wiping it on
@@ -105,127 +110,44 @@ object OpCache {
     Option(observed.get(spark)).fold(Set.empty[String])(_.keySet.toSet)
   }
 
-  def swap(key: String, df: DataFrame): DataFrame = synchronized {
-    val k = (df.sparkSession, key)
-    record(df.sparkSession, key, df.queryExecution.analyzed.semanticHash().toString)
-    live.get(k) match {
-      // Same input (plan-equal, so identical output attributes — both
-      // plans come from the same operator code): hand back the live
-      // cached table instead of re-registering it.
-      case Some(old) if old.queryExecution.analyzed.sameResult(df.queryExecution.analyzed) =>
-        // An external `spark.catalog.clearCache()` (or an unpersist of
-        // a plan-equal frame — uncacheQuery matches by plan, not by
-        // object) can strip the persistence out from under a live
-        // entry; handing it back unrepaired makes EVERY subsequent hit
-        // recompute the full lineage while looking cached. Re-pin it.
-        if (old.storageLevel == StorageLevel.NONE)
-          old.persist(StorageLevel.MEMORY_AND_DISK)
-        old
-      case other =>
-        other.foreach(_.unpersist(blocking = false))
-        live.put(k, df)
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-    }
-  }
+  /** Persist `df` in the `key` slot, or hand back the live entry when
+    * it was built from a plan-equal frame (same plan, so identical
+    * output attributes — both come from the same operator code).
+    */
+  def swap(key: String, df: DataFrame): DataFrame = swapByInput(key, df)(df)
 
-  // Keyed variant for TYPED pipelines: a Dataset built through
-  // mapPartitions/map embeds fresh closure objects in its plan on
-  // every construction, so two logically identical invocations never
-  // compare sameResult and `swap` would re-run the pipeline each time.
-  // Here the CALLER pins the inputs with a fingerprint string (e.g.
-  // the sf directory); while it matches, the cached table is returned
-  // without even building the new plan (the by-name `df` is not
-  // forced). Sound only when the pipeline is deterministic in the
-  // fingerprint — the same contract a shuffle-file reuse assumes.
-  private val keyed = scala.collection.mutable.Map
-    .empty[(org.apache.spark.sql.SparkSession, String), (String, DataFrame)]
-
-  def swapKeyed(key: String, fingerprint: String, df: => DataFrame)(
-      implicit spark: org.apache.spark.sql.SparkSession): DataFrame = synchronized {
-    val k = (spark, key)
-    record(spark, key, fingerprint)
-    keyed.get(k) match {
-      case Some((fp, old)) if fp == fingerprint =>
-        // same external-unpersist repair as swap
-        if (old.storageLevel == StorageLevel.NONE)
-          old.persist(StorageLevel.MEMORY_AND_DISK)
-        old
-      case other =>
-        other.foreach(_._2.unpersist(blocking = false))
-        val fresh = df
-        keyed.put(k, (fingerprint, fresh))
-        fresh.persist(StorageLevel.MEMORY_AND_DISK)
-    }
-  }
-
-  // Input-keyed variant for plans EMBEDDING TYPED AGGREGATORS: a
-  // udaf-bearing plan can never compare sameResult to its own
-  // re-construction — analysis (ResolveEncodersInScalaAgg) installs
-  // freshly RESOLVED encoder copies into the ScalaAggregator on every
-  // pass, and encoders are constructor args canonicalization never
-  // normalizes (found by the r12 two-pass single-slot audit: the
-  // hh.summary sketch re-registered, i.e. fully re-ran, on every warm
-  // invocation while looking cached). So key the slot on the UNTYPED
-  // INPUT plan instead: exact `sameResult` confirmation against the
-  // stored input — no hash trust, no typed expressions in the
-  // comparison — and `build` is by-name, so a hit never constructs
-  // the typed plan at all.
-  private val byInput = scala.collection.mutable.Map
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]
-
+  /** The memo primitive: the `key` slot's table when it was built from
+    * an input `sameResult` to `input`, else `build` (by-name — a hit
+    * never constructs it), persisted into the slot in place of the old
+    * entry, which is unpersisted.
+    */
   def swapByInput(key: String, input: DataFrame)(build: => DataFrame): DataFrame =
     synchronized {
       val spark = input.sparkSession
       val plan = input.queryExecution.analyzed
       record(spark, key, plan.semanticHash().toString)
-      byInput.get((spark, key)) match {
+      slots.get((spark, key)) match {
         case Some((stored, df)) if stored.sameResult(plan) =>
-          // same external-unpersist repair as swap
+          // An external `spark.catalog.clearCache()` (or an unpersist
+          // of a plan-equal frame — uncacheQuery matches by plan, not
+          // by object) can strip the persistence out from under a live
+          // entry; handing it back unrepaired makes EVERY subsequent
+          // hit recompute the full lineage while looking cached.
+          // Re-pin it.
           if (df.storageLevel == StorageLevel.NONE)
             df.persist(StorageLevel.MEMORY_AND_DISK)
           df
         case other =>
           other.foreach(_._2.unpersist(blocking = false))
           val fresh = build
-          byInput.put((spark, key), (plan, fresh))
+          slots.put((spark, key), (plan, fresh))
           fresh.persist(StorageLevel.MEMORY_AND_DISK)
       }
     }
 
-  // Memo for idempotent SIDE-EFFECTING builds (persisting ANN index
-  // artifact tables): the build is deterministic in its input and its
-  // writes are staged overwrites, so re-running it on the same input
-  // reproduces byte-identical tables — all a warm re-run buys is a
-  // second round of drops and table writes. `onceByInput` skips the
-  // build when the same (key, input-plan) pair already ran this
-  // session AND `stillValid` holds (callers pass "the published
-  // tables still exist", so an external DROP always forces a real
-  // rebuild). Cleared by clear() like every slot — the test-pinned
-  // rebuild path (OpCache.clear() between lifecycle probes) stays a
-  // real rebuild. In-memory per-JVM only: a fresh session/JVM always
-  // pays the build.
-  private val builtByInput = scala.collection.mutable.Map
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]
-
-  def onceByInput(key: String, input: DataFrame)(stillValid: => Boolean)(
-      build: => Unit): Unit = synchronized {
-    val spark = input.sparkSession
-    val plan = input.queryExecution.analyzed
-    record(spark, key, plan.semanticHash().toString)
-    val k = (spark, key)
-    if (!(builtByInput.get(k).exists(_.sameResult(plan)) && stillValid)) {
-      builtByInput.remove(k) // a failed build must not stay memoized
-      build
-      builtByInput.put(k, plan)
-    }
-  }
-
-  // Operator-local caches that don't route through swap (e.g. the
-  // k-means centroid memo, which caches EAGER localCheckpoint'd
-  // results) register an eviction hook so clear() empties them too —
-  // one call tears down ALL operator state.
+  // Operator state that doesn't route through a slot (the streaming
+  // fold memos, broadcast bloom filters) registers an eviction hook so
+  // clear() empties it too — one call tears down ALL operator state.
   private val clearHooks = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
 
   def registerClearHook(hook: () => Unit): Unit = synchronized {
@@ -234,13 +156,8 @@ object OpCache {
 
   /** Drop every live operator table (end-of-session / test teardown). */
   def clear(): Unit = synchronized {
-    live.values.foreach(_.unpersist(blocking = false))
-    live.clear()
-    keyed.values.foreach(_._2.unpersist(blocking = false))
-    keyed.clear()
-    byInput.values.foreach(_._2.unpersist(blocking = false))
-    byInput.clear()
-    builtByInput.clear()
+    slots.values.foreach(_._2.unpersist(blocking = false))
+    slots.clear()
     clearHooks.foreach(_.apply())
   }
 }

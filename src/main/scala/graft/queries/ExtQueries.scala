@@ -517,7 +517,7 @@ object ExtQueries {
         implicit val sp: org.apache.spark.sql.SparkSession = s
         // memoized feature table shared with the x194 recall gate —
         // the encode pipeline runs once per session per sf dir
-        val feats = Multimodal.featureTable(t(s, d, "documents"), d)
+        val feats = Multimodal.featureTable(t(s, d, "documents"))
         Similarity.cosineTopK(feats, site = "sim.mm.prep")
           .orderBy("query_id", "rank")
       },
@@ -3021,7 +3021,8 @@ object ExtQueries {
       (s, d) => {
         implicit val sp: org.apache.spark.sql.SparkSession = s
         import s.implicits._
-        val media = t(s, d, "documents").select(col("doc_id")).as[Long].flatMap { id =>
+        val docs = t(s, d, "documents")
+        val media = docs.select(col("doc_id")).as[Long].flatMap { id =>
           val orig = graft.operators.Multimodal.MediaFile(
             id, "image/bmp", graft.operators.Multimodal.buildBmpPixels(id))
           if (id % 97 == 0)
@@ -3030,9 +3031,10 @@ object ExtQueries {
               graft.operators.Multimodal.buildBmpPixels(id, phase = 0.005)))
           else Seq(orig)
         }
-        // fingerprint-keyed memo: the flatMap synthesis closure defeats
-        // plan-equality, so repeated runs would re-decode every pixel
-        graft.operators.OpCache.swapKeyed("mm.imgpairs", d,
+        // keyed on the untyped source: the flatMap synthesis closure
+        // defeats plan-equality, so repeated runs would re-decode every
+        // pixel
+        graft.operators.OpCache.swapByInput("mm.imgpairs", docs)(
             graft.operators.Multimodal.imageNearDupPairs(media, maxHamming = 3))
           .orderBy("id_a", "id_b")
       },
@@ -3050,7 +3052,8 @@ object ExtQueries {
       (s, d) => {
         implicit val sp: org.apache.spark.sql.SparkSession = s
         import s.implicits._
-        val media = t(s, d, "documents").select(col("doc_id")).as[Long].flatMap { id =>
+        val docs = t(s, d, "documents")
+        val media = docs.select(col("doc_id")).as[Long].flatMap { id =>
           val orig = graft.operators.Multimodal.MediaFile(
             id, "audio/wav", graft.operators.Multimodal.buildWavSamples(id))
           if (id % 97 == 0)
@@ -3059,8 +3062,8 @@ object ExtQueries {
               graft.operators.Multimodal.buildWavSamples(id, phase = 0.01)))
           else Seq(orig)
         }
-        // same fingerprint-keyed memo as x102, audio lane
-        graft.operators.OpCache.swapKeyed("mm.audpairs", d,
+        // same input-keyed memo as x102, audio lane
+        graft.operators.OpCache.swapByInput("mm.audpairs", docs)(
             graft.operators.Multimodal.audioNearDupPairs(media, maxHamming = 3))
           .orderBy("id_a", "id_b")
       },
@@ -5489,24 +5492,22 @@ object ExtQueries {
        |         md5(s[b.range * 2 + 1] || s[b.range * 2 + 2]) AS band_key
        |  FROM ${p}sig, range(4) AS b)""".stripMargin
 
-  /** One BPE training per (session, sf dir), shared by x104 (merges),
-    * x105 (segmentation) and x110 (vocabulary): the k lazy merge
-    * rounds embed localCheckpoint leaves, so two invocations are
+  /** One BPE training per (session, word dictionary), shared by x104
+    * (merges), x105 (segmentation) and x110 (vocabulary): the k lazy
+    * merge rounds embed localCheckpoint leaves, so two invocations are
     * never plan-equal and `OpCache.swap` could not share them —
-    * `swapKeyed` (fingerprint = the sf dir, the typed-pipeline
-    * lifecycle) caches BOTH outputs of a single training run; the
-    * lazy `trained` guarantees at most one training even when both
-    * entries miss.
+    * `swapByInput` keyed on the dictionary caches BOTH outputs of a
+    * single training run; the lazy `trained` guarantees at most one
+    * training even when both entries miss.
     */
   private def bpeTrained(
       s: org.apache.spark.sql.SparkSession, d: String): graft.operators.Bpe.Trained = {
-    implicit val sp: org.apache.spark.sql.SparkSession = s
     import graft.operators.{Bpe, OpCache}
     val dict0 = OpCache.swap("ext.bpe.dict", Bpe.wordDict(t(s, d, "documents")))
     lazy val trained = Bpe.trainFromDict(dict0, k = 4)
     Bpe.Trained(
-      OpCache.swapKeyed("ext.bpe.trained.dict", d, trained.dict),
-      OpCache.swapKeyed("ext.bpe.trained.merges", d, trained.merges))
+      OpCache.swapByInput("ext.bpe.trained.dict", dict0)(trained.dict),
+      OpCache.swapByInput("ext.bpe.trained.merges", dict0)(trained.merges))
   }
 
   /** Shared Spark side of the x47/x48 portable char-LSH pair set:

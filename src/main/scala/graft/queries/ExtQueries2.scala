@@ -1350,10 +1350,11 @@ object ExtQueries2 {
       "x194_multimodal_ann_recall_gate",
       (s, d) => {
         implicit val sp: org.apache.spark.sql.SparkSession = s
-        // the memoized feature table (fingerprint-keyed: the typed
-        // pipeline's closures defeat plan-equality memoization) —
-        // shared with x24, so gate and ANN query encode exactly once
-        val feats = graft.operators.Multimodal.featureTable(t(s, d, "documents"), d)
+        // the memoized feature table (keyed on the untyped documents
+        // input: the typed pipeline's closures defeat plan-equality
+        // memoization) — shared with x24, so gate and ANN query encode
+        // exactly once
+        val feats = graft.operators.Multimodal.featureTable(t(s, d, "documents"))
         val exact = graft.operators.OpCache.swap(
           "ext.x194.exact",
           graft.operators.Similarity.cosineTopK(feats, site = "sim.mm.prep")

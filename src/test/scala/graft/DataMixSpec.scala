@@ -26,37 +26,6 @@ class DataMixSpec extends SparkSpec {
     assert(a != b)
   }
 
-  test("train/test split is disjoint and exhaustive") {
-    val (train, test) = DataMix.trainTestSplit(docs, 0.2, 7L, Seq(col("doc_id")))
-    val tr = train.select("doc_id").collect().map(_.getLong(0)).toSet
-    val te = test.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert((tr & te).isEmpty)
-    assert(tr.size + te.size == docs.count())
-    val frac = te.size.toDouble / docs.count()
-    assert(math.abs(frac - 0.2) < 0.05, s"test fraction $frac")
-  }
-
-  test("deterministic shuffle reorders stably across runs and partitionings") {
-    val a = DataMix.shuffleDeterministic(docs, 5L, Seq(col("doc_id")))
-      .select("doc_id").collect().map(_.getLong(0)).toSeq
-    val b = DataMix.shuffleDeterministic(docs.repartition(17), 5L, Seq(col("doc_id")))
-      .select("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(a == b)
-    assert(a != a.sorted) // actually shuffled
-    assert(a.toSet == docs.select("doc_id").collect().map(_.getLong(0)).toSet)
-  }
-
-  test("weighted mix keeps per-source rates") {
-    import sqlImplicits._
-    val a = (1L to 1000L).map(i => (i, "a")).toDF("doc_id", "src")
-    val b = (1L to 1000L).map(i => (i + 10000L, "b")).toDF("doc_id", "src")
-    val mix = DataMix.weightedMix(Seq((a, 0.8), (b, 0.2)), 99L, Seq(col("doc_id")))
-      .groupBy("src").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(math.abs(mix("a") - 800L) < 80, s"got ${mix("a")}")
-    assert(math.abs(mix("b") - 200L) < 60, s"got ${mix("b")}")
-  }
-
   test("md5 sample is rate-accurate, partitioning-stable, and total at frac=1") {
     val kept = DataMix.md5Sample(docs, 0.3, Seq(col("doc_id")))
       .select("doc_id").collect().map(_.getLong(0)).toSet

@@ -501,7 +501,7 @@ class InvariantsSpec extends SparkSpec {
     // per-round hand audit): OpCache keeps ONE live entry per
     // (session, key), so a key whose consumers feed it two distinct
     // inputs unpersists and recomputes on every call while looking
-    // cached. OpCache records every swap/swapKeyed input fingerprint;
+    // cached. OpCache records every call's input fingerprint;
     // constructing the ENTIRE declared surface on a fresh session
     // (OpCache keys by session, so this audit is isolated from every
     // other suite's operator calls on the shared session) must leave

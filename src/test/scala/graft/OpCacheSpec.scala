@@ -31,22 +31,6 @@ class OpCacheSpec extends SparkSpec {
     OpCache.clear()
   }
 
-  test("swapKeyed re-pins on a fingerprint hit after an external clearCache") {
-    implicit val s = spark
-    val a = OpCache.swapKeyed("opcachespec.keyed", "fp1", plan())
-    a.count()
-    assert(a.storageLevel != StorageLevel.NONE)
-    spark.catalog.clearCache()
-    assert(a.storageLevel == StorageLevel.NONE)
-    val b = OpCache.swapKeyed("opcachespec.keyed", "fp1", plan())
-    assert(b.storageLevel != StorageLevel.NONE,
-      "a fingerprint hit must re-pin the unpersisted entry")
-    // a CHANGED fingerprint still rebuilds
-    val c = OpCache.swapKeyed("opcachespec.keyed", "fp2", plan())
-    assert(c.storageLevel != StorageLevel.NONE)
-    OpCache.clear()
-  }
-
   test("swapByInput: an input-plan hit skips the typed build entirely; a new input swaps") {
     import sqlImplicits._
     val in1 = (1 to 50).toDF("n")
@@ -63,7 +47,7 @@ class OpCacheSpec extends SparkSpec {
     val b = OpCache.swapByInput("opcachespec.byinput", (1 to 50).toDF("n"))(build(in1))
     assert(builds == 1, "an input-plan hit must not construct the typed plan")
     assert(b eq a)
-    // external rug-pull: the hit must re-pin, like swap/swapKeyed
+    // external rug-pull: the hit must re-pin, like swap
     spark.catalog.clearCache()
     assert(a.storageLevel == StorageLevel.NONE)
     val c = OpCache.swapByInput("opcachespec.byinput", in1)(build(in1))
@@ -72,6 +56,19 @@ class OpCacheSpec extends SparkSpec {
     // a DIFFERENT input swaps the slot and rebuilds
     val d = OpCache.swapByInput("opcachespec.byinput", in2)(build(in2))
     assert(builds == 2 && d.storageLevel != StorageLevel.NONE)
+    OpCache.clear()
+  }
+
+  test("one slot per key across entry points: swap evicts a swapByInput entry on another input") {
+    import sqlImplicits._
+    val in1 = (1 to 30).toDF("n")
+    val a = OpCache.swapByInput("opcachespec.shared", in1)(in1.groupBy().count())
+    a.count()
+    assert(a.storageLevel != StorageLevel.NONE)
+    val b = OpCache.swap("opcachespec.shared", plan())
+    assert(b.storageLevel != StorageLevel.NONE)
+    assert(a.storageLevel == StorageLevel.NONE,
+      "a swap on the same key must unpersist the entry swapByInput left there")
     OpCache.clear()
   }
 

@@ -7,20 +7,6 @@ import graft.operators.Skew
 
 class SkewAndAggSpec extends SparkSpec {
 
-  test("salted join returns exactly the plain join's rows on skewed data") {
-    import sqlImplicits._
-    // 90% of left rows share one hot key.
-    val left = (1 to 2000).map(i => (if (i % 10 == 0) i.toLong % 50 else 7L, i.toLong))
-      .toDF("k", "row_id")
-    val right = (0L until 50L).map(i => (i, s"v$i")).toDF("k", "payload")
-    val plain = left.join(right, Seq("k")).select("k", "row_id", "payload")
-      .collect().map(_.toSeq).toSet
-    val salted = Skew.saltedJoin(left, right, "k", col("row_id"), saltFactor = 8)
-      .select("k", "row_id", "payload").collect().map(_.toSeq).toSet
-    assert(salted == plain)
-    assert(salted.size == 2000)
-  }
-
   test("salted two-phase aggregate equals the direct aggregate") {
     import sqlImplicits._
     val df = (1 to 5000).map(i => (if (i % 20 == 0) i.toLong % 10 else 3L, i.toDouble))
@@ -65,8 +51,8 @@ class SkewAndAggSpec extends SparkSpec {
     import sqlImplicits._
     // One hot key carries ~all left rows; force SMJ (no broadcast) and
     // drop the skew thresholds so local-mode data sizes trigger the
-    // optimizer. This is Spark's own runtime answer to the problem
-    // Skew.saltedJoin solves statically — the engine supports both.
+    // optimizer. Spark's own runtime split is the engine's answer to
+    // join skew; no static salted join is kept beside it.
     val conf = spark.conf
     val saved = Seq(
       "spark.sql.autoBroadcastJoinThreshold",

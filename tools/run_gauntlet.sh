@@ -10,6 +10,9 @@ python3 tools/baseline_series.py | tail -1
 echo "== tests =="
 sbt -batch test 2>&1 | grep -E "Tests: succeeded|\*\*\* FAILED" | tail -2
 
+echo "== benchmark package tests (perfbench/tests) =="
+python3 -m unittest discover -s perfbench/tests 2>&1 | tail -1
+
 echo "== verify + oracle @ sf0.01 =="
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/gauntlet_001" >/dev/null 2>&1
 python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/gauntlet_001 | tail -1
